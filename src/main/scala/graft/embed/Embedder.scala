@@ -95,7 +95,9 @@ final case class HashEmbedder(dim: Int = 384, prefix: String = "") extends Embed
   * binary file on the classpath. Deliberately tiny, but it exercises the
   * FULL production seam the reference's `SentenceTransformer.encode` needs
   * (/root/reference/src/PDFToChromaIngester.py:41-49): weights deserialized
-  * once per executor JVM (`@transient lazy val` — the Spark analog of
+  * once per executor JVM (the `@transient lazy val` is per deserialized
+  * instance, i.e. per task, so it resolves through the JVM-wide
+  * [[WeightMemo]] in [[MlpEmbedder.load]] — the Spark analog of
   * one-model-per-worker), inference batched per partition through
   * [[Embedder.encode]], output dimension decoupled from input features. A
   * real ONNX/transformer model swaps in by replacing `forward` and the
@@ -108,7 +110,7 @@ final case class HashEmbedder(dim: Int = 384, prefix: String = "") extends Embed
   */
 final case class MlpEmbedder(resource: String = "/graft/toy_mlp.bin") extends Embedder {
 
-  @transient private lazy val model: MlpEmbedder.Weights =
+  @transient private[graft] lazy val model: MlpEmbedder.Weights =
     MlpEmbedder.load(resource)
 
   override def dim: Int = model.dimOut
@@ -158,7 +160,12 @@ object MlpEmbedder {
     }
   }
 
-  def load(resource: String): Weights = {
+  private val loaded = new WeightMemo[Weights]
+
+  /** The weights behind a classpath resource, read once per JVM. */
+  def load(resource: String): Weights = loaded(resource, ())(read(resource))
+
+  private[graft] def read(resource: String): Weights = {
     val in = Option(getClass.getResourceAsStream(resource))
       .getOrElse(throw new java.io.FileNotFoundException(
         s"embedder weights not on classpath: $resource"))
@@ -209,6 +216,21 @@ object MlpEmbedder {
   }
 }
 
+/** JVM-wide memo of loaded embedder weights. An embedder's
+  * `@transient lazy val` model lives per DESERIALIZED instance, and Spark
+  * deserializes the embedder once per task, so without this every task
+  * re-read its checkpoint. An entry is reused while its `stamp` (file
+  * size and mtime, or `()` for an immutable classpath resource) is
+  * unchanged and replaced when it changes, so a key holds at most one
+  * weight set. Callers must treat the shared weights as read-only. */
+private[embed] final class WeightMemo[W <: AnyRef] {
+  private val loaded = new java.util.concurrent.ConcurrentHashMap[String, (Any, W)]()
+
+  def apply(key: String, stamp: Any)(read: => W): W =
+    loaded.compute(key, (_, old) =>
+      if (old != null && old._1 == stamp) old else (stamp, read))._2
+}
+
 /** BGE/E5-style asymmetric instruction prefixes (reference:
   * /root/reference/src/ChromaCloudIngester.py:52,181 — passages embed as
   * "passage: ...", queries as "query: ..."): one weight set, two text
@@ -237,7 +259,7 @@ final case class TransformerEmbedder(resource: String = "/graft/toy_transformer.
                                      bpeMerges: Seq[(String, String)] = Nil)
     extends Embedder {
 
-  @transient private lazy val model: TransformerEmbedder.Weights =
+  @transient private[graft] lazy val model: TransformerEmbedder.Weights =
     TransformerEmbedder.load(resource)
 
   // rank map built once per (deserialized) embedder instance, not per doc
@@ -485,17 +507,24 @@ object TransformerEmbedder {
     }
   }
 
+  private val loaded = new WeightMemo[Weights]
+
   /** Load weights: a `.safetensors` resource reads a PRETRAINED
     * checkpoint from the FILESYSTEM through the HF-name mapping
     * ([[loadSafetensors]]); anything else reads the checked-in GTRF
     * binary from the classpath — the fallback that keeps the engine
-    * self-contained when no checkpoint is installed. */
+    * self-contained when no checkpoint is installed. Either way the
+    * read happens once per JVM: classpath resources are memoized by
+    * name, checkpoints by canonical path, size and mtime of `resource`
+    * (the index file, for a sharded one), so a rewritten checkpoint is
+    * re-read. */
   def load(resource: String): Weights =
-    if (resource.endsWith(".safetensors") || resource.endsWith(".safetensors.index.json"))
-      loadSafetensors(resource)
-    else loadGtrf(resource)
+    if (resource.endsWith(".safetensors") || resource.endsWith(".safetensors.index.json")) {
+      val f = new java.io.File(resource).getCanonicalFile
+      loaded(s"file:${f.getPath}", (f.length, f.lastModified))(loadSafetensors(resource))
+    } else loaded(s"classpath:$resource", ())(loadGtrf(resource))
 
-  private def loadGtrf(resource: String): Weights = {
+  private[graft] def loadGtrf(resource: String): Weights = {
     val in = Option(getClass.getResourceAsStream(resource))
       .getOrElse(throw new java.io.FileNotFoundException(
         s"transformer weights not on classpath: $resource"))

@@ -115,14 +115,7 @@ object MutableIvf {
     val w = readWatermark(store, index)
     // probe cells: nearest nprobe by (double l2², cid) — same tie rule
     // as assignment
-    val qd = qv.map(_.toDouble)
-    val probed = cents.map { case (cid, c) =>
-      var acc = 0.0
-      var i = 0
-      val n = math.min(qd.length, c.length)
-      while (i < n) { val d = qd(i) - c(i); acc += d * d; i += 1 }
-      (acc, cid)
-    }.sortBy(identity).take(nprobe).map(_._2).toSeq
+    val probed = Similarity.probeCells(qv, cents, nprobe)
     val cand = store.read(spark, index)
       .filter(col("cell_id").isin(probed.map(Int.box): _*)) // PartitionFilters
       .filter(col(MutableCollection.SeqCol) <= w) // point-in-time bound

@@ -97,14 +97,7 @@ object MutablePq {
     val (cents, cb, vecCol, idCol) = readQuantizer(store, index)
     val w = readWatermark(store, index)
     val centById = cents.toMap
-    // probe: raw-double (dist, cid), the pqSearchEncoded rule
-    val probed = cents.map { case (cid, c) =>
-      var acc = 0.0
-      var i = 0
-      val n = math.min(qv.length, c.length)
-      while (i < n) { val d = qv(i).toDouble - c(i); acc += d * d; i += 1 }
-      (acc, cid)
-    }.sortBy(p => (p._1, p._2)).take(nprobe).map(_._2)
+    val probed = Similarity.probeCells(qv, cents, nprobe)
     // per probed cell: ADC table over the query's cell residual
     val tables: Map[Int, Array[Array[Double]]] = probed.map { cell =>
       val cc = centById(cell)
@@ -131,7 +124,7 @@ object MutablePq {
       s
     })
     val cand = store.read(spark, index)
-      .filter(col("cell_id").isin(probed.map(Int.box).toIndexedSeq: _*)) // PartitionFilters
+      .filter(col("cell_id").isin(probed.map(Int.box): _*)) // PartitionFilters
       .filter(col(MutableCollection.SeqCol) <= w) // point-in-time bound
     val live = mc.applyTombstoneFilter(spark, cand, asOf = Some(w))
       .dropDuplicates(idCol) // crash-duplicate guard

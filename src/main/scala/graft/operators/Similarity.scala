@@ -2,8 +2,11 @@ package graft.operators
 
 import graft.functions.VectorFunctions._
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Bridge
+import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, IntegerType, MapType}
 
 /** Approximate-nearest-neighbor search over an `ARRAY<FLOAT>` embedding
   * column. Three tiers:
@@ -628,6 +631,22 @@ object Similarity {
         "err_growth_ppm", "max_cell_share_ppm", "retrain_recommended")
   }
 
+  /** The IVF probe rule: the `nprobe` cells nearest to `qv`, ranked by
+    * raw-double squared L2 to each centroid with ties broken by the lower
+    * cell id. Every raw-double router (stored, mutable, PQ, the
+    * [[graft.plans.AnnProbeRule]] rewrite) probes through this one
+    * definition, so their cell choices cannot drift apart. The
+    * 1e-6-rounded routes ([[CentroidRouter]], SQ) are a different rule. */
+  def probeCells(qv: Array[Float], cents: Array[(Int, Array[Float])],
+                 nprobe: Int): Seq[Int] =
+    cents.map { case (id, c) =>
+      var acc = 0.0
+      var i = 0
+      val n = math.min(qv.length, c.length)
+      while (i < n) { val d = qv(i).toDouble - c(i); acc += d * d; i += 1 }
+      (acc, id)
+    }.sortBy(p => (p._1, p._2)).take(nprobe).map(_._2).toSeq
+
   /** Index-aware auto search — the planner verb: given candidate stored
     * layouts, pick the strongest family available for a cosine top-k
     * and run it, tagging the output with the chosen index. Priority:
@@ -660,14 +679,7 @@ object Similarity {
       .select(col(idCol), col("cosine"), col("rank"), col("index_kind"))
     kinds.collectFirst { case (n, "ivf") => n } match {
       case Some(n) =>
-        val cents = readStoredRouter(store, n).get
-        val probed = cents.map { case (id, c) =>
-          var acc = 0.0
-          var i = 0
-          val len = math.min(qv.length, c.length)
-          while (i < len) { val d = qv(i).toDouble - c(i); acc += d * d; i += 1 }
-          (acc, id)
-        }.sortBy(p => (p._1, p._2)).take(nprobe).map(_._2).toSeq
+        val probed = probeCells(qv, readStoredRouter(store, n).get, nprobe)
         finish(store.read(spark, n)
           .filter(col("cell_id").isin(probed.map(Int.box): _*))
           .withColumn("cosine", round(cosine(col(vecCol), vecLit(qv)), 6)),
@@ -763,45 +775,46 @@ object Similarity {
 
   /** Batch kNN over the STORED IVF layout — Q queries amortized onto ONE
     * partition-pruned scan (the bulk-retrieval posture: embedding-table
-    * joins, evaluation panels, reranker refresh). Routing runs once per
-    * query through the index's frozen router (same (distance, cid) probe
-    * rule as [[graft.plans.AnnProbe]]); the literal union of probed
-    * cells lands as a PartitionFilter so the scan lists only those
-    * directories — per-query candidate pairing then happens INSIDE the
-    * pruned scan via a broadcast join on cell_id (a cell probed by query
-    * A but not B pairs only with A). The only shuffle carries slim
+    * joins, evaluation panels, reranker refresh).
+    *
+    * Routing runs on the DRIVER: the query frame is collected once and
+    * each query is routed through the index's frozen router with
+    * [[probeCells]]. That routing yields, without running a job, both the
+    * literal union of probed cells (a PartitionFilter, so the scan lists
+    * only those directories) and a cell -> query-index map literal. Each
+    * scanned row is paired with the queries probing its cell by an
+    * `explode` over that map — a cell probed by query A but not B pairs
+    * only with A — and scored against the query vector picked out of one
+    * array literal. No join, no broadcast exchange: the whole verb is one
+    * scan-and-rank query whose only shuffle carries slim
     * (q_id, id, cosine) rows into the per-query window rank.
     *
-    * At 100 TB: scan cost is O(union of probed cells) regardless of Q;
-    * the broadcast is Q·nprobe routing rows plus the query vectors —
-    * small by the probe-batch contract (the per-query work is bounded by
-    * nprobe cells exactly as the single-query path). */
+    * The driver collect is bounded by the probe-batch contract: Q query
+    * vectors, the same rows a broadcast of the query side would have
+    * materialized on the driver anyway, and they ride in the plan as
+    * Q·dim floats. Scan cost is O(union of probed cells) regardless of
+    * Q; per-query work is bounded by nprobe cells exactly as on the
+    * single-query path. */
   def ivfSearchStoredMany(stored: DataFrame, vecCol: String, idCol: String,
                           cents: Array[(Int, Array[Float])],
                           queries: DataFrame, qIdCol: String, qVecCol: String,
                           k: Int = 10, nprobe: Int = 4): DataFrame = {
-    val probeUdf = udf((v: Seq[Float]) => {
-      val arr = v.toArray
-      cents.map { case (id, c) =>
-        var acc = 0.0
-        var i = 0
-        val n = math.min(arr.length, c.length)
-        while (i < n) { val d = arr(i).toDouble - c(i); acc += d * d; i += 1 }
-        (acc, id)
-      }.sortBy(p => (p._1, p._2)).take(nprobe).map(_._2)
-    })
-    val probes = queries.select(col(qIdCol), col(qVecCol),
-      explode(probeUdf(col(qVecCol))).as("cell_id"))
-    // bounded collect (<= ncells rows): the literal cell set the
-    // partition filter needs, derived from the SAME routing relation the
-    // join uses — one code path, no driver-side re-derivation to drift
-    val unionCells = probes.select("cell_id").distinct()
-      .collect().map(_.getInt(0)).sorted.toSeq
+    val qSel = queries.select(col(qIdCol), col(qVecCol).cast("array<float>"))
+    val qRows = qSel.collect()
+    val qVecs = qRows.map(_.getSeq[Float](1).toArray)
+    val byCell: Map[Int, Seq[Int]] = qVecs.indices
+      .flatMap(q => probeCells(qVecs(q), cents, nprobe).map(_ -> q))
+      .groupMap(_._1)(_._2)
+    def literal(v: Any, t: DataType): Column = Bridge.column(Literal.create(v, t))
+    val qIds = literal(qRows.map(_.get(0)).toSeq, ArrayType(qSel.schema(0).dataType))
+    val qVecLit = literal(qVecs.toSeq.map(_.toSeq), ArrayType(ArrayType(FloatType)))
+    val cellQueries = literal(byCell, MapType(IntegerType, ArrayType(IntegerType)))
     val w = Window.partitionBy(col(qIdCol))
       .orderBy(col("cosine").desc, col(idCol))
-    stored.filter(col("cell_id").isin(unionCells.map(Int.box): _*))
-      .join(broadcast(probes), Seq("cell_id"))
-      .withColumn("cosine", round(cosine(col(vecCol), col(qVecCol)), 6))
+    stored.filter(col("cell_id").isin(byCell.keys.toSeq.sorted.map(Int.box): _*))
+      .withColumn("_q", explode(cellQueries(col("cell_id").cast("int"))))
+      .withColumn(qIdCol, qIds(col("_q")))
+      .withColumn("cosine", round(cosine(col(vecCol), qVecLit(col("_q"))), 6))
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
       .select(col(qIdCol), col(idCol), col("cell_id"), col("cosine"), col("rank"))
@@ -1129,14 +1142,7 @@ object Similarity {
     // per (query, probed cell): ADC table over the query's cell residual
     val probeTables: Map[(Long, Int), Array[Array[Double]]] = qRows.flatMap {
       case (qid, qv) =>
-        val probed = cents.map { case (id, c) =>
-          var acc = 0.0
-          var i = 0
-          val n = math.min(qv.length, c.length)
-          while (i < n) { val d = qv(i).toDouble - c(i); acc += d * d; i += 1 }
-          (acc, id)
-        }.sortBy(p => (p._1, p._2)).take(nprobe).map(_._2)
-        probed.map { cell =>
+        probeCells(qv, cents, nprobe).map { cell =>
           val cc = centById(cell)
           val tab = Array.tabulate(cb.m) { j =>
             val cjs = cb.cents(j)
@@ -1643,13 +1649,7 @@ object Similarity {
       rankTop(collection.filter(predicate), "pre")
     } else {
       val cents = trainCentroidArrays(collection, vecCol, idCol, ncells, trainIters)
-      val probed = cents.map { case (id, c) =>
-        var acc = 0.0
-        var i = 0
-        val len = math.min(qv.length, c.length)
-        while (i < len) { val d = qv(i).toDouble - c(i); acc += d * d; i += 1 }
-        (acc, id)
-      }.sortBy(p => (p._1, p._2)).take(nprobe).map(_._2).toSeq
+      val probed = probeCells(qv, cents, nprobe)
       rankTop(withCellId(collection, vecCol, cents)
         .filter(col("cell_id").isin(probed.map(Int.box): _*) && predicate),
         "post")

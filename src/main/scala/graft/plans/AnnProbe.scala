@@ -1,6 +1,7 @@
 package graft.plans
 
 import graft.functions.VectorDistance
+import graft.operators.Similarity
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.expressions.{Alias, Ascending, Attribute, Expression, In, Literal, SortOrder}
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, GlobalLimit, LocalLimit, LogicalPlan, Project, Sort}
@@ -87,16 +88,6 @@ object AnnProbe {
 
 object AnnProbeRule extends Rule[LogicalPlan] {
 
-  private def probeCells(qv: Array[Float], cents: Array[(Int, Array[Float])],
-                         nprobe: Int): Seq[Int] =
-    cents.map { case (id, c) =>
-      var acc = 0.0
-      var i = 0
-      val n = math.min(qv.length, c.length)
-      while (i < n) { val d = qv(i).toDouble - c(i); acc += d * d; i += 1 }
-      (acc, id)
-    }.sortBy(p => (p._1, p._2)).take(nprobe).map(_._2).toSeq
-
   private def literalVec(e: Expression): Option[Array[Float]] = e match {
     case Literal(a: ArrayData, t) if t.sql.startsWith("ARRAY<FLOAT>") => Some(a.toFloatArray())
     case _ => None
@@ -135,7 +126,7 @@ object AnnProbeRule extends Rule[LogicalPlan] {
           if (cellAttr(child).isEmpty || alreadyProbed(child)) None
           else queryVecOf(key, child).map { qv =>
             Filter(In(cellAttr(child).get,
-              probeCells(qv, cents, nprobe).map(c => Literal(c))), child)
+              Similarity.probeCells(qv, cents, nprobe).map(c => Literal(c))), child)
           }
         plan.transformUp {
           case g @ GlobalLimit(_, l @ LocalLimit(_,

@@ -1379,6 +1379,32 @@ class AnnProbeSpec extends SparkSpec {
           "q_vec", k = 5, ncells = 8, nprobe = 2)
         .orderBy("q_id", "rank").collect().toSeq
       assert(stored == inline, "stored batch search diverged from inline ivfTopK")
+      // edge inputs against the same inline operator and router: one
+      // query, an empty query frame, and nprobe = ncells (the union
+      // covers every cell)
+      def agrees(qs: org.apache.spark.sql.DataFrame, nprobe: Int): Int = {
+        val got = Similarity.ivfSearchStoredMany(store.read(spark, "vectors"),
+            "embedding", "vec_id", cents, qs, "q_id", "q_vec", k = 5, nprobe = nprobe)
+          .orderBy("q_id", "rank")
+          .select("q_id", "vec_id", "cosine", "rank").collect().toSeq
+        val want = Similarity.ivfTopK(e, "embedding", "vec_id", qs, "q_id",
+            "q_vec", k = 5, ncells = 8, nprobe = nprobe, centsOpt = Some(cents))
+          .orderBy("q_id", "rank").collect().toSeq
+        assert(got == want, s"diverged from ivfTopK at nprobe=$nprobe")
+        got.length
+      }
+      assert(agrees(q.filter(col("q_id") === 1), 2) == 5)
+      assert(agrees(q.limit(0), 2) == 0)
+      assert(agrees(q, 8) == 15)
+      // the fixed cost stays pinned: on a local query frame the whole
+      // verb, routing included, is one scan-and-rank query of <= 2 jobs
+      val local = spark.createDataFrame(java.util.Arrays.asList(q.collect(): _*), q.schema)
+      val vectors = store.read(spark, "vectors")
+      val (rows, jobs) = jobsOf(Similarity.ivfSearchStoredMany(vectors,
+        "embedding", "vec_id", cents, local, "q_id", "q_vec", k = 5, nprobe = 2).collect())
+      info(s"batch stored-IVF search on a local frame: $jobs Spark jobs")
+      assert(jobs <= 2, s"batch stored-IVF search ran $jobs Spark jobs")
+      assert(rows.length == stored.length)
     } finally store.destroy()
   }
 

@@ -262,6 +262,45 @@ class EmbedderSpec extends SparkSpec {
     assert(run(2) == run(16))
   }
 
+  test("weights load once per JVM: deserialized embedder copies share one Weights") {
+    // Spark ships an embedder to every task by serialization; each copy's
+    // transient model must resolve to the same JVM-wide weight set
+    def copy[T <: AnyRef](x: T): T = {
+      val bytes = new java.io.ByteArrayOutputStream
+      val out = new java.io.ObjectOutputStream(bytes)
+      out.writeObject(x); out.close()
+      new java.io.ObjectInputStream(new java.io.ByteArrayInputStream(bytes.toByteArray))
+        .readObject().asInstanceOf[T]
+    }
+    val text = "spark shuffles the lineitem table"
+    val t = TransformerEmbedder(prefix = "passage: ")
+    val (t1, t2) = (copy(t), copy(t))
+    assert(t1 ne t2)
+    assert(t1.encodeOne(text).toSeq == t2.encodeOne(text).toSeq)
+    assert(t1.model eq t2.model, "each deserialized transformer re-read its checkpoint")
+    val m = MlpEmbedder()
+    val (m1, m2) = (copy(m), copy(m))
+    assert(m1.encodeOne(text).toSeq == m2.encodeOne(text).toSeq)
+    assert(m1.model eq m2.model, "each deserialized MLP re-read its weights")
+    // the shared weights are the ones a fresh read yields: same vectors
+    val ids = Array(3, 141, 59, 26)
+    assert(t1.model.forward(ids).toSeq ==
+      TransformerEmbedder.loadGtrf("/graft/toy_transformer.bin").forward(ids).toSeq)
+    val x = HashEmbedder(dim = m1.model.dimIn).encodeOne(text)
+    assert(m1.model.forward(x).toSeq ==
+      MlpEmbedder.read("/graft/toy_mlp.bin").forward(x).toSeq)
+    // a file checkpoint is keyed by path, size and mtime: a rewrite with
+    // a new mtime is read again, an untouched file is not
+    val (stPath, _) = writeHfFixture(java.nio.file.Files.createTempDirectory("st_memo"))
+    val w1 = TransformerEmbedder.load(stPath)
+    assert(TransformerEmbedder.load(stPath) eq w1)
+    val f = new java.io.File(stPath)
+    assert(f.setLastModified(f.lastModified - 60000L))
+    val w2 = TransformerEmbedder.load(stPath)
+    assert(w2 ne w1)
+    assert(w2.forward(ids.map(_ % w2.vocab)).toSeq == w1.forward(ids.map(_ % w1.vocab)).toSeq)
+  }
+
   // ------------------------------------------------- safetensors seam
 
   /** Deterministic PRNG floats (xorshift64*, the repo's fixture
