@@ -1,17 +1,13 @@
 package graft.operators
 
-import graft.store.{MutableCollection, StoreFs, VectorStore}
+import graft.store.{StoreFs, VectorStore}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** BINARY-QUANTIZED search over a LIVE mutable collection — the
-  * [[MutableIvf]]/[[MutableSq]] merge-on-read discipline for the
-  * cheapest index family: every row VERSION stores dim/8 bytes of sign
-  * signatures (+ the collection's metadata and seq), deletes need no
-  * maintenance (the shared tombstone filter resolves versions at
-  * search), upserts reach the index through an O(delta) seq-pruned
-  * [[refresh]], and consistency is point-in-time at the indexed
-  * watermark.
+  * [[LiveIndex]] protocol for the cheapest index family: every row
+  * VERSION stores dim/8 bytes of sign signatures (+ the collection's
+  * metadata and seq).
   *
   * BQ is the simplest member of the matrix because its quantizer is
   * TRAIN-FREE (sign bits at zero): attach persists no learned artifact,
@@ -27,44 +23,30 @@ import org.apache.spark.sql.functions._
   * under a FULL gate hash like its immutable siblings. */
 object MutableBq {
 
-  private val WatermarkFile = "_indexed.properties"
   private val MetaFile = "_bq_meta.properties"
+
+  private type Meta = (String, String, Int)
+
+  /** Signature projection for index rows — every collection column
+    * except the raw vector, plus (bq_lo, bq_hi), in ONE map-only
+    * select. */
+  private val Live = LiveIndex.Family[Meta]("bq", cellPartitioned = false, {
+    case (rows, (vecCol, _, dim)) =>
+      val (lo, hi) = Similarity.bqEncodeExprs(col(vecCol), dim)
+      rows.withColumn("bq_lo", lo).withColumn("bq_hi", hi).drop(vecCol)
+  })
 
   /** Build the signature index over the collection's current rows (all
     * versions) and record the indexed watermark. */
   def attach(spark: SparkSession, store: VectorStore, collection: String,
-             vecCol: String, index: String, dim: Int = 64): Unit = {
-    val mc = store.mutable(collection)
-    val watermark = mc.currentSeq // BEFORE reading — the family rule
-    val raw = store.read(spark, collection)
-    store.create(index, encodeRows(raw, vecCol, dim))
-    writeMeta(store, index, vecCol, mc.idCol, dim)
-    writeWatermark(store, index, watermark, collection)
-  }
-
-  /** Signature projection for index rows — every collection column
-    * except the raw vector, plus (bq_lo, bq_hi), in ONE map-only
-    * select. One seam for attach and refresh. */
-  private def encodeRows(rows: DataFrame, vecCol: String, dim: Int): DataFrame = {
-    val (lo, hi) = Similarity.bqEncodeExprs(col(vecCol), dim)
-    rows.withColumn("bq_lo", lo).withColumn("bq_hi", hi).drop(vecCol)
-  }
+             vecCol: String, index: String, dim: Int = 64): Unit =
+    LiveIndex.attach(spark, store, collection, index, Live)(
+      (_, idCol) => (vecCol, idCol, dim))(writeMeta(store, index, _)): Unit
 
   /** Index the rows written since the last refresh — O(delta). */
   def refresh(spark: SparkSession, store: VectorStore,
-              collection: String, index: String): Long = {
-    val mc = store.mutable(collection)
-    val from = readWatermark(store, index)
-    val to = mc.currentSeq
-    if (to == from) return to
-    val (vecCol, _, dim) = readMeta(store, index)
-    val delta = store.read(spark, collection)
-      .filter(col(MutableCollection.SeqCol) > from &&
-        col(MutableCollection.SeqCol) <= to)
-    store.append(index, encodeRows(delta, vecCol, dim))
-    writeWatermark(store, index, to, collection) // AFTER the append — crash model
-    to
-  }
+              collection: String, index: String): Long =
+    LiveIndex.refresh(spark, store, collection, index, Live)(readMeta(store, index))
 
   /** Top-k over the live collection as of the index watermark: Hamming
     * pre-rank over live signature versions (tombstone filter + where +
@@ -77,13 +59,10 @@ object MutableBq {
     import graft.functions.VectorFunctions.{cosine, vecLit}
     val mc = store.mutable(collection)
     val (vecCol, idCol, dim) = readMeta(store, index)
-    val w = readWatermark(store, index)
+    val w = LiveIndex.readWatermark(store, index)
     val (qlo, qhi) = Similarity.bqPackLocal(qv, dim)
-    val cand = store.read(spark, index)
-      .filter(col(MutableCollection.SeqCol) <= w) // point-in-time bound
-    val live = mc.applyTombstoneFilter(spark, cand, asOf = Some(w))
-    val shortlist = where.fold(live)(j => live.filter(graft.query.WhereDsl.parse(j)))
-      .dropDuplicates(idCol) // crash-duplicate guard
+    val shortlist = LiveIndex.liveCandidates(spark, store, mc, index, idCol, w,
+        where = where)
       .select(col(idCol),
         (bit_count(col("bq_lo").bitwiseXOR(lit(qlo))) +
           bit_count(col("bq_hi").bitwiseXOR(lit(qhi))))
@@ -101,17 +80,16 @@ object MutableBq {
       .select(col(idCol), col("hamming"), col("cosine"))
   }
 
-  private def writeMeta(store: VectorStore, index: String,
-                        vecCol: String, idCol: String, dim: Int): Unit = {
+  private def writeMeta(store: VectorStore, index: String, meta: Meta): Unit = {
     val props = new java.util.Properties()
-    props.setProperty("vecCol", vecCol)
-    props.setProperty("idCol", idCol)
-    props.setProperty("dim", dim.toString)
+    props.setProperty("vecCol", meta._1)
+    props.setProperty("idCol", meta._2)
+    props.setProperty("dim", meta._3.toString)
     StoreFs.forPath(store.root).writePropsAtomic(
       s"${store.root}/$index/$MetaFile", props, "graft mutable-bq meta")
   }
 
-  private def readMeta(store: VectorStore, index: String): (String, String, Int) = {
+  private def readMeta(store: VectorStore, index: String): Meta = {
     val props = StoreFs.forPath(store.root)
       .readProps(s"${store.root}/$index/$MetaFile")
       .getOrElse(throw new IllegalArgumentException(
@@ -119,13 +97,4 @@ object MutableBq {
     (props.getProperty("vecCol"), props.getProperty("idCol"),
       props.getProperty("dim").toInt)
   }
-
-  private def writeWatermark(store: VectorStore, index: String, seq: Long,
-      collection: String): Unit =
-    MutableVacuum.writeWatermark(store, index, seq, collection, "bq")
-
-  private def readWatermark(store: VectorStore, index: String): Long =
-    StoreFs.forPath(store.root)
-      .readProps(s"${store.root}/$index/$WatermarkFile")
-      .fold(0L)(_.getProperty("seq", "0").toLong)
 }

@@ -56,20 +56,16 @@ import org.apache.spark.sql.functions._
 object MutableGraph {
 
   private val RouterFile = "_router.properties"
-  private val WatermarkFile = "_indexed.properties"
 
-  /** Live rows (id, vec, seq) as of `asOf` — the collection's own
-    * tombstone-merge rule over its version history. */
-  private def liveRows(spark: SparkSession, store: VectorStore,
-      mc: MutableCollection, vecCol: String,
-      asOf: Option[Long]): DataFrame = {
-    val base0 = store.read(spark, mc.name)
-    val base = asOf.fold(base0)(s => base0.filter(col(MutableCollection.SeqCol) <= s))
-    mc.applyTombstoneFilter(spark, base, asOf)
+  /** The collection's live view as of `asOf`
+    * ([[MutableCollection.liveWithSeq]]) in the walk kernel's
+    * (id, vec, seq) node shape. */
+  private def liveNodes(spark: SparkSession, mc: MutableCollection,
+                        vecCol: String, asOf: Option[Long]): DataFrame =
+    mc.liveWithSeq(spark, asOf)
       .select(col(mc.idCol).cast("long").as("id"),
         col(vecCol).cast("array<float>").as("vec"),
         col(MutableCollection.SeqCol).as("seq"))
-  }
 
   /** Cell-partitioned NSW build over (id, vec, seq, cell_id) rows: the
     * node rows plus the version seq they were built from. */
@@ -100,14 +96,14 @@ object MutableGraph {
              efConstruction: Int = 32): Array[Array[Float]] = {
     val mc = store.mutable(collection)
     val watermark = mc.currentSeq // BEFORE reading — the family rule
-    val live = liveRows(spark, store, mc, vecCol, asOf = None)
+    val live = liveNodes(spark, mc, vecCol, asOf = None)
     val cents = Clustering.trainCentroids(live, ncells, iters, "id", "vec")
     val assigned = live.withColumn("cell_id",
       Clustering.assignStruct(col("vec"), cents).getField("cid"))
     store.create(index, buildCells(assigned, m, efConstruction),
       partitionBy = Seq("cell_id"))
     writeRouter(store, index, cents, vecCol, mc.idCol, m, efConstruction)
-    writeWatermark(store, index, watermark, collection)
+    LiveIndex.writeWatermark(store, index, watermark, collection, "graph")
     cents
   }
 
@@ -118,20 +114,17 @@ object MutableGraph {
   def refresh(spark: SparkSession, store: VectorStore,
               collection: String, index: String): Long = {
     val mc = store.mutable(collection)
-    val from = readWatermark(store, index)
+    val from = LiveIndex.readWatermark(store, index)
     val to = mc.currentSeq
     if (to == from) return to
     val (cents, vecCol, _, m, efC) = readRouter(store, index)
-    val delta = store.read(spark, collection)
-      .filter(col(MutableCollection.SeqCol) > from &&
-        col(MutableCollection.SeqCol) <= to)
     // bounded collect: <= ncells touched cell ids
-    val touched = delta
+    val touched = mc.writtenIn(spark, from, to)
       .select(Clustering.assignStruct(col(vecCol).cast("array<float>"), cents)
         .getField("cid").as("cell_id"))
       .distinct().collect().map(_.getInt(0)).sorted
     if (touched.nonEmpty) {
-      val members = liveRows(spark, store, mc, vecCol, asOf = Some(to))
+      val members = liveNodes(spark, mc, vecCol, asOf = Some(to))
         .withColumn("cell_id",
           Clustering.assignStruct(col("vec"), cents).getField("cid"))
         .filter(col("cell_id").isin(touched.map(Int.box).toIndexedSeq: _*))
@@ -140,7 +133,7 @@ object MutableGraph {
       val rebuilt = buildCells(members, m, efC).localCheckpoint(true)
       store.overwritePartitions(index, rebuilt, Seq("cell_id"))
     }
-    writeWatermark(store, index, to, collection) // AFTER the rewrite — crash model
+    LiveIndex.writeWatermark(store, index, to, collection, "graph") // AFTER the rewrite
     to
   }
 
@@ -185,7 +178,7 @@ object MutableGraph {
              index: String, maxGarbagePpm: Long = 200000L,
              precomputedReport: Option[DataFrame] = None): Array[Int] = {
     val mc = store.mutable(collection)
-    val w = readWatermark(store, index)
+    val w = LiveIndex.readWatermark(store, index)
     val (cents, vecCol, _, m, efC) = readRouter(store, index)
     // bounded collect: the report is one row per cell; a caller that
     // already ran the report on the CURRENT state hands it in and the
@@ -196,7 +189,7 @@ object MutableGraph {
       .filter(col("n_garbage") > 0L && col("garbage_ppm") > maxGarbagePpm)
       .select("cell_id").collect().map(_.getInt(0)).sorted
     if (dirty.isEmpty) return dirty
-    val members = liveRows(spark, store, mc, vecCol, asOf = Some(w))
+    val members = liveNodes(spark, mc, vecCol, asOf = Some(w))
       .withColumn("cell_id",
         Clustering.assignStruct(col("vec"), cents).getField("cid"))
       .filter(col("cell_id").isin(dirty.map(Int.box).toIndexedSeq: _*))
@@ -232,7 +225,7 @@ object MutableGraph {
     import spark.implicits._
     val mc = store.mutable(collection)
     val (cents, _, idCol, _, _) = readRouter(store, index)
-    val w = readWatermark(store, index)
+    val w = LiveIndex.readWatermark(store, index)
     val probed = Similarity.sqProbeCells(cents, qv, nprobe)
     val qf = qv.map(_.toFloat)
     val cand = store.read(spark, index)
@@ -288,9 +281,7 @@ object MutableGraph {
     props.setProperty("idCol", idCol)
     props.setProperty("m", m.toString)
     props.setProperty("efConstruction", efC.toString)
-    cents.zipWithIndex.foreach { case (c, cid) =>
-      props.setProperty(s"cell.$cid", c.map(_.toString).mkString(","))
-    }
+    Similarity.putCells(props, cents.zipWithIndex.map(_.swap))
     StoreFs.forPath(store.root).writePropsAtomic(
       s"${store.root}/$index/$RouterFile", props, "graft mutable-graph router")
   }
@@ -301,22 +292,8 @@ object MutableGraph {
       .readProps(s"${store.root}/$index/$RouterFile")
       .getOrElse(throw new IllegalArgumentException(
         s"'$index' carries no router — build it with MutableGraph.attach"))
-    import scala.jdk.CollectionConverters._
-    val cents = props.stringPropertyNames().asScala.toSeq
-      .filter(_.startsWith("cell."))
-      .map(key => (key.stripPrefix("cell.").toInt,
-        props.getProperty(key).split(",").map(_.toFloat)))
-      .sortBy(_._1).map(_._2).toArray
-    (cents, props.getProperty("vecCol"), props.getProperty("idCol"),
-      props.getProperty("m").toInt, props.getProperty("efConstruction").toInt)
+    (Similarity.readCells(props).map(_._2), props.getProperty("vecCol"),
+      props.getProperty("idCol"), props.getProperty("m").toInt,
+      props.getProperty("efConstruction").toInt)
   }
-
-  private def writeWatermark(store: VectorStore, index: String, seq: Long,
-      collection: String): Unit =
-    MutableVacuum.writeWatermark(store, index, seq, collection, "graph")
-
-  private def readWatermark(store: VectorStore, index: String): Long =
-    StoreFs.forPath(store.root)
-      .readProps(s"${store.root}/$index/$WatermarkFile")
-      .fold(0L)(_.getProperty("seq", "0").toLong)
 }

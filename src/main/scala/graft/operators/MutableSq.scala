@@ -1,27 +1,16 @@
 package graft.operators
 
-import graft.store.{MutableCollection, StoreFs, VectorStore}
+import graft.store.{StoreFs, VectorStore}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** COMPRESSED ANN over a LIVE mutable collection — [[MutableIvf]]'s
-  * merge-on-read discipline generalized to the int8-SQ encode family,
-  * so a mutable collection can carry a compressed index: same cell
-  * layout, CODES instead of vectors (1 byte/dim — at 100 TB the live
-  * index is ~4× smaller than the mutable-IVF one and the probe scan
-  * reads code bytes, never floats).
-  *
-  * Everything that made the IVF variant consistent carries over
-  * unchanged, because none of it touched the payload representation:
-  *
-  *  - the index stores every row VERSION (id, metadata, seq, cell_id,
-  *    sq_code) and search applies the collection's OWN tombstone filter
-  *    ([[MutableCollection.applyTombstoneFilter]] — shared code) after
-  *    the partition-pruned probe, so deletes need NO index maintenance;
-  *  - upserts reach it through an O(delta) seq-pruned [[refresh]];
-  *  - consistency is point-in-time at the index watermark; crash
-  *    duplicates from a refresh that died between append and watermark
-  *    advance are collapsed by the bounded per-id dedup.
+/** COMPRESSED ANN over a LIVE mutable collection — the [[LiveIndex]]
+  * protocol over the int8-SQ encode family, so a mutable collection can
+  * carry a compressed index: same cell layout as [[MutableIvf]], CODES
+  * instead of vectors (1 byte/dim — at 100 TB the live index is ~4×
+  * smaller than the mutable-IVF one and the probe scan reads code
+  * bytes, never floats). The protocol carries over unchanged because
+  * none of it touches the payload representation.
   *
   * What is NEW is the frozen artifact set: the router (centroids) AND
   * the scalar quantizer (per-dim min/max) freeze at [[attach]] and
@@ -42,22 +31,21 @@ import org.apache.spark.sql.functions._
 object MutableSq {
 
   private val QuantFile = "_sq_quantizer.properties"
-  private val WatermarkFile = "_indexed.properties"
 
-  /** The encode projection shared by attach and refresh — one seam so
-    * build and delta can never disagree on the quantizer arithmetic:
-    * every collection column except the raw vector, plus (cell_id,
-    * sq_code). */
-  private def encodeRows(rows: DataFrame, vecCol: String,
-      cents: Array[Array[Float]], mins: Array[Double],
-      maxs: Array[Double]): DataFrame = {
-    import graft.functions.VectorFunctions.sqEncode
-    rows
-      .withColumn("cell_id",
-        Clustering.assignStruct(col(vecCol), cents).getField("cid"))
-      .withColumn("sq_code", sqEncode(col(vecCol), mins, maxs))
-      .drop(vecCol)
-  }
+  private type Quantizer =
+    (Array[Array[Float]], Array[Double], Array[Double], String, String)
+
+  /** The encode projection: every collection column except the raw
+    * vector, plus (cell_id, sq_code). */
+  private val Live = LiveIndex.Family[Quantizer]("sq", cellPartitioned = true, {
+    case (rows, (cents, mins, maxs, vecCol, _)) =>
+      import graft.functions.VectorFunctions.sqEncode
+      rows
+        .withColumn("cell_id",
+          Clustering.assignStruct(col(vecCol), cents).getField("cid"))
+        .withColumn("sq_code", sqEncode(col(vecCol), mins, maxs))
+        .drop(vecCol)
+  })
 
   /** Build the SQ index over the collection's CURRENT rows (all
     * versions — dead ones filter at read): train the deterministic
@@ -67,39 +55,20 @@ object MutableSq {
   def attach(spark: SparkSession, store: VectorStore, collection: String,
              vecCol: String, index: String, ncells: Int = 8,
              iters: Int = 2): (Array[Array[Float]], Array[Double], Array[Double]) = {
-    val mc = store.mutable(collection)
-    val watermark = mc.currentSeq // BEFORE reading — the MutableIvf rule:
-    // rows landing mid-build are re-indexed by the next refresh and the
-    // crash-duplicate dedup absorbs the overlap
-    val raw = store.read(spark, collection)
-    val cents = Clustering.trainCentroids(raw, ncells, iters, mc.idCol, vecCol)
-    val (mins, maxs) = Similarity.sqMinMax(raw, vecCol)
-    store.create(index,
-      Similarity.clusterByCell(encodeRows(raw, vecCol, cents, mins, maxs)),
-      partitionBy = Seq("cell_id"))
-    writeQuantizer(store, index, cents, mins, maxs, vecCol, mc.idCol)
-    writeWatermark(store, index, watermark, collection)
+    val (cents, mins, maxs, _, _) =
+      LiveIndex.attach(spark, store, collection, index, Live) { (raw, idCol) =>
+        val cents = Clustering.trainCentroids(raw, ncells, iters, idCol, vecCol)
+        val (mins, maxs) = Similarity.sqMinMax(raw, vecCol)
+        (cents, mins, maxs, vecCol, idCol)
+      }(writeQuantizer(store, index, _))
     (cents, mins, maxs)
   }
 
   /** Index the rows written since the last refresh — O(delta), frozen
     * quantizer (see class doc). Returns the new watermark. */
   def refresh(spark: SparkSession, store: VectorStore,
-              collection: String, index: String): Long = {
-    val mc = store.mutable(collection)
-    val from = readWatermark(store, index)
-    val to = mc.currentSeq
-    if (to == from) return to
-    val (cents, mins, maxs, vecCol, _) = readQuantizer(store, index)
-    val delta = store.read(spark, collection)
-      .filter(col(MutableCollection.SeqCol) > from &&
-        col(MutableCollection.SeqCol) <= to)
-    store.append(index,
-      Similarity.clusterByCell(encodeRows(delta, vecCol, cents, mins, maxs)),
-      partitionBy = Seq("cell_id"))
-    writeWatermark(store, index, to, collection) // AFTER the append — crash model
-    to
-  }
+              collection: String, index: String): Long =
+    LiveIndex.refresh(spark, store, collection, index, Live)(readQuantizer(store, index))
 
   /** Top-k over the live collection as of the index watermark:
     * partition-pruned probe (same floor-rounded lowest-cid probe rule
@@ -113,15 +82,10 @@ object MutableSq {
     import graft.functions.VectorFunctions.sqAdc
     val mc = store.mutable(collection)
     val (cents, mins, maxs, _, idCol) = readQuantizer(store, index)
-    val w = readWatermark(store, index)
     val scales = Array.tabulate(mins.length)(i => (maxs(i) - mins(i)) / 255)
-    val probed = Similarity.sqProbeCells(cents, qv, nprobe)
-    val cand = store.read(spark, index)
-      .filter(col("cell_id").isin(probed.map(Int.box).toIndexedSeq: _*)) // PartitionFilters
-      .filter(col(MutableCollection.SeqCol) <= w) // point-in-time bound
-    val live = mc.applyTombstoneFilter(spark, cand, asOf = Some(w))
-    where.fold(live)(j => live.filter(graft.query.WhereDsl.parse(j)))
-      .dropDuplicates(idCol) // crash-duplicate guard (see MutableIvf)
+    LiveIndex.liveCandidates(spark, store, mc, index, idCol,
+        LiveIndex.readWatermark(store, index),
+        Some(Similarity.sqProbeCells(cents, qv, nprobe).toIndexedSeq), where)
       // rank on the ROUNDED distance — the SQ-family discipline
       // (sqSearchStored does the same): the floor-rounded micro-units
       // are what the gate oracle reproduces, so the top-k cut must
@@ -134,17 +98,15 @@ object MutableSq {
   }
 
   private def writeQuantizer(store: VectorStore, index: String,
-      cents: Array[Array[Float]], mins: Array[Double], maxs: Array[Double],
-      vecCol: String, idCol: String): Unit = {
+                             q: Quantizer): Unit = {
+    val (cents, mins, maxs, vecCol, idCol) = q
     val props = new java.util.Properties()
     props.setProperty("vecCol", vecCol)
     props.setProperty("idCol", idCol)
     props.setProperty("dim", mins.length.toString)
-    cents.zipWithIndex.foreach { case (c, cid) =>
-      // Float/Double.toString round-trip exactly — the persisted
-      // quantizer reproduces attach-time encode bit for bit
-      props.setProperty(s"cell.$cid", c.map(_.toString).mkString(","))
-    }
+    Similarity.putCells(props, cents.zipWithIndex.map(_.swap))
+    // Double.toString round-trips exactly — the persisted quantizer
+    // reproduces attach-time encode bit for bit
     mins.indices.foreach { i =>
       props.setProperty(s"min.$i", mins(i).toString)
       props.setProperty(s"max.$i", maxs(i).toString)
@@ -153,30 +115,15 @@ object MutableSq {
       s"${store.root}/$index/$QuantFile", props, "graft mutable-sq quantizer")
   }
 
-  private def readQuantizer(store: VectorStore, index: String)
-      : (Array[Array[Float]], Array[Double], Array[Double], String, String) = {
+  private def readQuantizer(store: VectorStore, index: String): Quantizer = {
     val props = StoreFs.forPath(store.root)
       .readProps(s"${store.root}/$index/$QuantFile")
       .getOrElse(throw new IllegalArgumentException(
         s"'$index' carries no quantizer — build it with MutableSq.attach"))
-    import scala.jdk.CollectionConverters._
-    val cents = props.stringPropertyNames().asScala.toSeq
-      .filter(_.startsWith("cell."))
-      .map(k => (k.stripPrefix("cell.").toInt,
-        props.getProperty(k).split(",").map(_.toFloat)))
-      .sortBy(_._1).map(_._2).toArray
     val dim = props.getProperty("dim").toInt
-    val mins = Array.tabulate(dim)(i => props.getProperty(s"min.$i").toDouble)
-    val maxs = Array.tabulate(dim)(i => props.getProperty(s"max.$i").toDouble)
-    (cents, mins, maxs, props.getProperty("vecCol"), props.getProperty("idCol"))
+    (Similarity.readCells(props).map(_._2),
+      Array.tabulate(dim)(i => props.getProperty(s"min.$i").toDouble),
+      Array.tabulate(dim)(i => props.getProperty(s"max.$i").toDouble),
+      props.getProperty("vecCol"), props.getProperty("idCol"))
   }
-
-  private def writeWatermark(store: VectorStore, index: String, seq: Long,
-      collection: String): Unit =
-    MutableVacuum.writeWatermark(store, index, seq, collection, "sq")
-
-  private def readWatermark(store: VectorStore, index: String): Long =
-    StoreFs.forPath(store.root)
-      .readProps(s"${store.root}/$index/$WatermarkFile")
-      .fold(0L)(_.getProperty("seq", "0").toLong)
 }

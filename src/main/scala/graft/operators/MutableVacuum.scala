@@ -61,38 +61,9 @@ import org.apache.spark.sql.functions._
   * filtering), and re-running vacuum is idempotent. */
 object MutableVacuum {
 
-  /** Every mutable-index family records its indexed watermark under the
-    * same sidecar name — one constant, shared here rather than per-file
-    * privates, so vacuum can serve all of them. */
-  private[operators] val WatermarkFile = "_indexed.properties"
-
-  private[operators] def readWatermark(store: VectorStore, index: String): Long =
-    StoreFs.forPath(store.root)
-      .readProps(s"${store.root}/$index/$WatermarkFile")
-      .fold(0L)(_.getProperty("seq", "0").toLong)
-
-  /** ONE watermark writer for all five families (was five identical
-    * privates): besides the indexed seq, the sidecar records WHICH
-    * collection the index serves — the binding that lets
-    * [[graft.store.VectorStore.indexCatalog]] surface per-index garbage
-    * columns without being handed an explicit index list (the r13/r14
-    * discoverability gap: the advisor existed but a user had to already
-    * know which indexes to ask about). */
-  private[operators] def writeWatermark(store: VectorStore, index: String,
-      seq: Long, collection: String, family: String): Unit = {
-    val props = new java.util.Properties()
-    props.setProperty("seq", seq.toString)
-    props.setProperty("collection", collection)
-    StoreFs.forPath(store.root).writePropsAtomic(
-      s"${store.root}/$index/$WatermarkFile", props,
-      s"graft mutable-$family indexed watermark")
-  }
-
   /** The collection an index's watermark sidecar binds it to, if any. */
   def boundCollection(store: VectorStore, index: String): Option[String] =
-    StoreFs.forPath(store.root)
-      .readProps(s"${store.root}/$index/$WatermarkFile")
-      .flatMap(p => Option(p.getProperty("collection")))
+    LiveIndex.boundCollection(store, index)
 
   /** Catalog hook: for an index whose sidecar binds it to a collection,
     * the advisor aggregate — (worst-cell garbage ppm, vacuum
@@ -134,7 +105,7 @@ object MutableVacuum {
   def report(spark: SparkSession, store: VectorStore, collection: String,
              index: String): DataFrame = {
     val mc = store.mutable(collection)
-    val w = readWatermark(store, index)
+    val w = LiveIndex.readWatermark(store, index)
     val idx = normalized(store.read(spark, index), mc)
     val cellCol =
       if (idx.columns.contains("cell_id")) col("cell_id").cast("int")
@@ -254,7 +225,7 @@ object MutableVacuum {
                   maxGarbagePpm: Long = 200000L,
                   precomputedReport: Option[DataFrame] = None): Array[Int] = {
     val mc = store.mutable(collection)
-    val w = readWatermark(store, index)
+    val w = LiveIndex.readWatermark(store, index)
     // bounded collect: the report is one row per cell
     val dirty = precomputedReport
       .getOrElse(report(spark, store, collection, index))
@@ -323,7 +294,7 @@ object MutableVacuum {
                  maxGarbagePpm: Long = 200000L,
                  precomputedReport: Option[DataFrame] = None): Boolean = {
     val mc = store.mutable(collection)
-    val w = readWatermark(store, index)
+    val w = LiveIndex.readWatermark(store, index)
     val r = precomputedReport
       .getOrElse(report(spark, store, collection, index)).head()
     val (garbage, ppm) = (r.getAs[Long]("n_garbage"), r.getAs[Long]("garbage_ppm"))

@@ -424,11 +424,7 @@ object Similarity {
                                        name: String,
                                        cents: Array[(Int, Array[Float])]): Unit = {
     val props = new java.util.Properties()
-    cents.foreach { case (cid, c) =>
-      // Float.toString round-trips exactly — the persisted router
-      // reproduces build-time assignment bit for bit
-      props.setProperty(s"cell.$cid", c.map(_.toString).mkString(","))
-    }
+    putCells(props, cents)
     graft.store.StoreFs.forPath(store.root).writePropsAtomic(
       s"${store.root}/$name/$RouterFile", props, "graft stored-ivf router")
   }
@@ -438,14 +434,27 @@ object Similarity {
                        name: String): Option[Array[(Int, Array[Float])]] =
     graft.store.StoreFs.forPath(store.root)
       .readProps(s"${store.root}/$name/$RouterFile")
-      .map { props =>
-        import scala.jdk.CollectionConverters._
-        props.stringPropertyNames().asScala.toSeq
-          .filter(_.startsWith("cell."))
-          .map(key => (key.stripPrefix("cell.").toInt,
-            props.getProperty(key).split(",").map(_.toFloat)))
-          .sortBy(_._1).toArray
-      }
+      .map(readCells)
+
+  /** The centroid codec every router-carrying sidecar shares (stored
+    * IVF/SQ/PQ, live IVF/SQ/PQ/graph): one `cell.<id> = f1,f2,...`
+    * property per centroid. Float.toString round-trips exactly, so a
+    * persisted router reproduces build-time assignment bit for bit. */
+  private[operators] def putCells(props: java.util.Properties,
+                                  cents: Iterable[(Int, Array[Float])]): Unit =
+    cents.foreach { case (cid, c) =>
+      props.setProperty(s"cell.$cid", c.map(_.toString).mkString(","))
+    }
+
+  /** Decode [[putCells]]: the centroids, sorted by cell id. */
+  private[operators] def readCells(props: java.util.Properties): Array[(Int, Array[Float])] = {
+    import scala.jdk.CollectionConverters._
+    props.stringPropertyNames().asScala.toSeq
+      .filter(_.startsWith("cell."))
+      .map(key => (key.stripPrefix("cell.").toInt,
+        props.getProperty(key).split(",").map(_.toFloat)))
+      .sortBy(_._1).toArray
+  }
 
   // ----------------------------------- retrain advisor (router drift)
 
@@ -531,9 +540,7 @@ object Similarity {
       name: String, cents: Array[Array[Float]],
       mins: Array[Double], maxs: Array[Double]): Unit = {
     val props = new java.util.Properties()
-    cents.zipWithIndex.foreach { case (c, i) =>
-      props.setProperty(s"cell.$i", c.map(_.toString).mkString(","))
-    }
+    putCells(props, cents.zipWithIndex.map(_.swap))
     props.setProperty("mins", mins.map(_.toString).mkString(","))
     props.setProperty("maxs", maxs.map(_.toString).mkString(","))
     graft.store.StoreFs.forPath(store.root).writePropsAtomic(
@@ -545,13 +552,7 @@ object Similarity {
     graft.store.StoreFs.forPath(store.root)
       .readProps(s"${store.root}/$name/$SqQuantFile")
       .map { props =>
-        import scala.jdk.CollectionConverters._
-        val cents = props.stringPropertyNames().asScala.toSeq
-          .filter(_.startsWith("cell."))
-          .map(k => (k.stripPrefix("cell.").toInt,
-            props.getProperty(k).split(",").map(_.toFloat)))
-          .sortBy(_._1).map(_._2).toArray
-        (cents, props.getProperty("mins").split(",").map(_.toDouble),
+        (readCells(props).map(_._2), props.getProperty("mins").split(",").map(_.toDouble),
           props.getProperty("maxs").split(",").map(_.toDouble))
       }
 
@@ -559,9 +560,7 @@ object Similarity {
       name: String, cents: Array[(Int, Array[Float])],
       cb: PqCodebook): Unit = {
     val props = new java.util.Properties()
-    cents.foreach { case (cid, c) =>
-      props.setProperty(s"cell.$cid", c.map(_.toString).mkString(","))
-    }
+    putCells(props, cents)
     props.setProperty("cb.m", cb.m.toString)
     props.setProperty("cb.dsub", cb.dsub.toString)
     props.setProperty("cb.ksub", cb.ksub.toString)
@@ -577,17 +576,11 @@ object Similarity {
     graft.store.StoreFs.forPath(store.root)
       .readProps(s"${store.root}/$name/$PqCodebookFile")
       .map { props =>
-        import scala.jdk.CollectionConverters._
-        val cents = props.stringPropertyNames().asScala.toSeq
-          .filter(_.startsWith("cell."))
-          .map(k => (k.stripPrefix("cell.").toInt,
-            props.getProperty(k).split(",").map(_.toFloat)))
-          .sortBy(_._1).toArray
         val (m, dsub, ksub) = (props.getProperty("cb.m").toInt,
           props.getProperty("cb.dsub").toInt, props.getProperty("cb.ksub").toInt)
         val cbc = Array.tabulate(m, ksub)((sub, code) =>
           props.getProperty(s"cb.$sub.$code").split(",").map(_.toFloat))
-        (cents, PqCodebook(m, dsub, ksub, cbc))
+        (readCells(props), PqCodebook(m, dsub, ksub, cbc))
       }
 
   /** RETRAIN ADVISOR for a stored-IVF layout — the decision operator the
@@ -1121,6 +1114,28 @@ object Similarity {
     head.getSeq[Int](2)
   }
 
+  /** The ADC table of one query against one probed cell: per subspace
+    * j and code c, the squared L2 between the query's residual to the
+    * cell centroid `cc` and codebook entry c, accumulated in double in
+    * dimension order. Every PQ search (stored and live) scores through
+    * this one loop, so their distances are bit-identical. */
+  private[operators] def pqAdcTable(qv: Array[Float], cc: Array[Float],
+                                    cb: PqCodebook): Array[Array[Double]] =
+    Array.tabulate(cb.m) { j =>
+      val cjs = cb.cents(j)
+      Array.tabulate(cjs.length) { c =>
+        var acc = 0.0
+        var i = 0
+        while (i < cb.dsub) {
+          val off = j * cb.dsub + i
+          val d = (qv(off).toDouble - cc(off)) - cjs(c)(i)
+          acc += d * d
+          i += 1
+        }
+        acc
+      }
+    }
+
   /** ADC search over an ALREADY-ENCODED relation (inline from
     * [[pqEncode]] or read back from the store): probed cells become a
     * LITERAL `cell_id IN (...)` filter — on the stored cell_id-partitioned
@@ -1143,22 +1158,7 @@ object Similarity {
     val probeTables: Map[(Long, Int), Array[Array[Double]]] = qRows.flatMap {
       case (qid, qv) =>
         probeCells(qv, cents, nprobe).map { cell =>
-          val cc = centById(cell)
-          val tab = Array.tabulate(cb.m) { j =>
-            val cjs = cb.cents(j)
-            Array.tabulate(cjs.length) { c =>
-              var acc = 0.0
-              var i = 0
-              while (i < cb.dsub) {
-                val off = j * cb.dsub + i
-                val d = (qv(off).toDouble - cc(off)) - cjs(c)(i)
-                acc += d * d
-                i += 1
-              }
-              acc
-            }
-          }
-          (qid, cell) -> tab
+          (qid, cell) -> pqAdcTable(qv, centById(cell), cb)
         }
     }.toMap
     val adc = udf((qid: Long, cell: Int, code: Array[Byte]) => {

@@ -382,9 +382,7 @@ final case class MutableCollection(store: VectorStore, name: String) {
     * so the pushdown shape stays pinned. */
   private[graft] def touchedIdsDelta(spark: SparkSession, fromSeq: Long,
                                      toSeq: Long): DataFrame = {
-    val touchedData = store.read(spark, name)
-      .filter(col(SeqCol) > fromSeq && col(SeqCol) <= toSeq)
-      .select(col(idCol))
+    val touchedData = writtenIn(spark, fromSeq, toSeq).select(col(idCol))
     readTombstones(spark)
       .map(t => touchedData.union(
         t.filter(col(DelSeqCol) > fromSeq && col(DelSeqCol) <= toSeq)
@@ -392,12 +390,21 @@ final case class MutableCollection(store: VectorStore, name: String) {
       .getOrElse(touchedData)
   }
 
+  /** Every row version written in `(fromSeq, toSeq]` — dead ones
+    * included — as a plain range predicate on the hidden seq column
+    * (PushedFilters; each batch's files carry a constant seq, so parquet
+    * min/max stats prune the scan to O(delta) files). The delta read of
+    * the CDC probe and of every live-index refresh. */
+  private[graft] def writtenIn(spark: SparkSession, fromSeq: Long,
+                               toSeq: Long): DataFrame =
+    store.read(spark, name).filter(col(SeqCol) > fromSeq && col(SeqCol) <= toSeq)
+
   /** The merged view WITH the seq column (compact must preserve it —
     * later tombstones still order against surviving rows). With `asOf`
     * set, both sides are bounded at that sequence first (snapshot
     * semantics). */
-  private def liveWithSeq(spark: SparkSession,
-                          asOf: Option[Long] = None): DataFrame = {
+  private[graft] def liveWithSeq(spark: SparkSession,
+                                 asOf: Option[Long] = None): DataFrame = {
     val base0 = store.read(spark, name)
     val base = asOf.fold(base0)(s => base0.filter(col(SeqCol) <= s))
     applyTombstoneFilter(spark, base, asOf)

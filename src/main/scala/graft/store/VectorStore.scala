@@ -587,6 +587,14 @@ object VectorStore {
   private val schemaCache = new java.util.concurrent.ConcurrentHashMap[
     String, (String, org.apache.spark.sql.types.StructType)]()
 
+  /** Inference is ALSO a function of the session confs that shape it,
+    * so their values are part of the cache key beside the directory: a
+    * path read under one setting never replays its schema under
+    * another. */
+  private val InferenceConfs = Seq("spark.sql.parquet.binaryAsString",
+    "spark.sql.legacy.parquet.nanosAsLong", "spark.sql.caseSensitive",
+    "spark.sql.parquet.mergeSchema")
+
   private[graft] def readParquetCached(spark: SparkSession, sfs: StoreFs,
                                        dir: String): DataFrame = {
     val fp =
@@ -608,12 +616,14 @@ object VectorStore {
           .sorted.mkString("\n")
       } catch { case _: Throwable => null } // unlistable: fall through, uncached
     if (fp == null) return spark.read.parquet(dir)
-    val hit = schemaCache.get(dir)
+    val key = InferenceConfs.map(k => spark.conf.getOption(k).orNull)
+      .mkString(s"$dir|", "|", "")
+    val hit = schemaCache.get(key)
     if (hit != null && hit._1 == fp) spark.read.schema(hit._2).parquet(dir)
     else {
       val df = spark.read.parquet(dir)
       if (schemaCache.size > 8192) schemaCache.clear() // scratch-store churn bound
-      schemaCache.put(dir, (fp, df.schema))
+      schemaCache.put(key, (fp, df.schema))
       df
     }
   }
